@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * `runMain graft.Bench [names…]` runs only the named queries, under
+  * the same protocol, and leaves bench_out.json alone.
   *
   * Each query is forced through a `noop`-format write so the full plan
   * materializes (a bare count() would let Catalyst prune projections).
@@ -27,18 +29,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // safety net: periodic ContextCleaner GC every 60s instead of the
-      // 30min default (a full bench run can finish inside one default
-      // interval, i.e. with zero cleanups)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create()
 
     def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -118,7 +109,10 @@ object Bench {
         .map(_.getCollectionTime.max(0L)).sum / 1e3
     }
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    // named queries only (iterating on a few), else the whole suite
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(" ")}")
 
     // One untimed warmup PASS over the whole suite, then two timed
     // PASSES — i.e. the two samples of a query are separated by a full
@@ -196,9 +190,11 @@ object Bench {
     val total = r3(results.map(_._2).filter(_ >= 0).sum)
     val line =
       s"""{"metric":"total","unit":"sec","sf":"$sfDir","protocol":"min-of-2-interleaved","queries":$qs,"gc":$gcs,"runs":$runs,"plan":$plans,"build":$builds,"value":$total}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-      (line + "\n").getBytes)
-    catch { case _: Throwable => () }
+    // a subset run must not clobber the full-suite artifact
+    if (args.isEmpty)
+      try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
+        (line + "\n").getBytes)
+      catch { case _: Throwable => () }
     println(line)
     spark.stop()
   }

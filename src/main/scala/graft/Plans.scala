@@ -1,9 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** Dumps formatted physical plans for flagship queries (PLANS.md
-  * generator): `runMain graft.Plans <sfDir>` */
+/** Plan dumps. `runMain graft.Plans <sfDir>` prints the formatted
+  * physical plans of the flagship queries (the PLANS.md generator);
+  * `runMain graft.Plans <sfDir> [names…]` runs the named queries and
+  * prints each one's executed plan with node metrics. */
 object Plans {
   val flagship = Seq("q2_point", "q9_semijoin", "q13_topk", "q16_join3",
     "q18_tpch1", "x7_ngram_jaccard", "x8_minhash_lsh", "q23_knn",
@@ -43,25 +47,47 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    println("# PLANS - formatted physical plans of flagship queries")
-    println()
-    println(s"Generated by `runMain graft.Plans $sfDir`. The shapes asserted")
-    println("by PlanSpec (pushdown, pruning, broadcasts, top-k, partial agg)")
-    println("are visible here; see SCALING.md for the 100 TB argument.")
-    flagship.foreach { name =>
-      println(s"\n## $name\n")
-      println("```")
-      println(SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode).take(60000))
-      println("```")
+    // 8 cores on every box: formatted plans embed the shuffle partition
+    // count, and PLANS.md (like PlanSpec's session) is taken at 8
+    val spark = Sessions.create(cores = 8, logLevel = "ERROR")
+    if (args.length > 1) args.drop(1).foreach(explainExecuted(spark, sfDir, _))
+    else {
+      println("# PLANS - formatted physical plans of flagship queries")
+      println()
+      println(s"Generated by `runMain graft.Plans $sfDir`. The shapes asserted")
+      println("by PlanSpec (pushdown, pruning, broadcasts, top-k, partial agg)")
+      println("are visible here; see SCALING.md for the 100 TB argument.")
+      flagship.foreach { name =>
+        println(s"\n## $name\n")
+        println("```")
+        println(SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.explainString(FormattedMode).take(60000))
+        println("```")
+      }
     }
     spark.stop()
+  }
+
+  /** Runs `name` and prints its EXECUTED plan, one node per line with
+    * the node's non-zero time, row, file and spill metrics — the
+    * iterate-until-it's-the-plan-you-want loop. */
+  private def explainExecuted(spark: SparkSession, sfDir: String, name: String): Unit = {
+    def walk(p: SparkPlan, depth: Int): Unit = {
+      val interesting = p.metrics.filter { case (k, m) =>
+        (k.toLowerCase.contains("time") || k == "numOutputRows" ||
+          k == "numFiles" || k.contains("spill")) && m.value > 0
+      }.map { case (k, m) => s"$k=${m.value}" }.mkString(" ")
+      println(s"[metrics] ${"  " * depth}${p.nodeName} $interesting")
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1)
+        case q: QueryStageExec => walk(q.plan, depth + 1)
+        case other => other.children.foreach(walk(_, depth + 1))
+      }
+    }
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    val t0 = System.nanoTime()
+    df.collect()
+    println(f"[explain] ==== $name (${(System.nanoTime() - t0) / 1e9}%.3f s) ====")
+    walk(df.queryExecution.executedPlan, 0)
   }
 }

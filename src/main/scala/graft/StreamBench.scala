@@ -3,10 +3,10 @@ package graft
 import java.nio.file.Files
 import graft.streaming.Flows
 import graft.tables.TableStore
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming throughput bench: pushes every lineitem row of
   * SPARK_GRAFT_SF_DIR through the FULL admission flow (validation,
@@ -27,24 +27,22 @@ import org.apache.spark.sql.streaming.Trigger
   * time per topic partition (single-partition topics, blocking
   * channel, commit-per-message — clientes.yaml:151, inventario/
   * main.go:50-66), so its ceiling is a few hundred messages/sec per
-  * consumer. */
+  * consumer.
+  *
+  * The `packing` and `ingest` variants time the document-side flows the
+  * same way. The two-topic consumer saga (`Flows.consumerFlow`) is
+  * measured by the perfbench `cdc_saga` workload. */
 object StreamBench {
   case class R(id: String, evento: String, email: String, cantidad: Int, seq: Long)
-  /** A raw two-topic CDC wire message (KafkaIO.readTopics shape). */
-  case class M(topic: String, value: String)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val variant = sys.env.getOrElse("SPARK_GRAFT_STREAM_VARIANT", "both")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROUNDS", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    require(Set("both", "batch", "stateful", "packing", "ingest")(variant),
+      s"unknown SPARK_GRAFT_STREAM_VARIANT '$variant' " +
+        "(expected both | batch | stateful | packing | ingest)")
+    val spark = Sessions.create(logLevel = "ERROR")
     import spark.implicits._
     implicit val sql = spark.sqlContext
 
@@ -58,19 +56,25 @@ object StreamBench {
       .as[R].collect()
     val n = requests.length
 
-    def freshStore(): TableStore = {
-      val root = Files.createTempDirectory("graft-streambench").toString
-      val store = new TableStore(spark, root)
-      store.init("inventario", spark.read.parquet(s"$sfDir/part.parquet").select(
-        col("p_partkey").cast("string").as("id"),
-        col("p_partkey").cast("string").as("nombre"),
-        (col("p_size") * 1000).as("capacidad"),
-        lit("Cat").as("categoria"), lit("A").as("estado"),
-        lit(null).cast("string").as("idres"),
-        lit(null).cast("string").as("email"),
-        lit(null).cast("int").as("canres")))
-      store.init("reservas", graft.sources.Tables.reservas(spark).limit(0))
-      store
+    def freshRoot(tag: String): String =
+      Files.createTempDirectory(s"graft-streambench-$tag").toString
+
+    /** Feeds `rows` to the flow `start` builds, in `nRounds` micro-
+      * batches of ONE long-running query (addData, then drain), and
+      * returns the wall seconds from query start to stop. The source
+      * has one partition per core: a single-partition MemoryStream
+      * would serialize every scan of a batch through one thread. */
+    def drive[T: Encoder](rows: Array[T], nRounds: Int)(
+        start: Dataset[T] => StreamingQuery): Double = {
+      val ms = MemoryStream[T](spark, spark.sparkContext.defaultParallelism)
+      val t0 = System.nanoTime()
+      val q = start(ms.toDS())
+      rows.grouped((rows.length + nRounds - 1) / nRounds).foreach { c =>
+        ms.addData(c.toSeq)
+        q.processAllAvailable()
+      }
+      q.stop()
+      (System.nanoTime() - t0) / 1e9
     }
 
     def stateProvider(rocksdb: Boolean): Unit =
@@ -86,88 +90,25 @@ object StreamBench {
     def run(metric: String, stateful: Boolean, nRounds: Int,
         rocksdb: Boolean = false): Unit = {
       stateProvider(rocksdb)
-      val store = freshStore()
-      // long-running trigger so each addData round is its own
-      // micro-batch of ONE live query (state carries over in the
-      // state store for the stateful variant)
-      val flows = new Flows(spark, store,
-        trigger = Trigger.ProcessingTime(0))
-      // multi-partition source: a single-partition MemoryStream would
-      // serialize every scan of the batch through one thread
-      val ms = MemoryStream[R](spark, cpus.toInt)
-      val chunk = (n + nRounds - 1) / nRounds
-      val t0 = System.nanoTime()
-      val q = if (stateful) flows.admissionFlowStateful(ms.toDS().toDF())
-        else flows.admissionFlow(ms.toDS().toDF())
-      requests.grouped(chunk).foreach { c =>
-        ms.addData(c.toSeq)
-        q.processAllAvailable()
+      val store = new TableStore(spark, freshRoot("admission"))
+      store.init("inventario", spark.read.parquet(s"$sfDir/part.parquet").select(
+        col("p_partkey").cast("string").as("id"),
+        col("p_partkey").cast("string").as("nombre"),
+        (col("p_size") * 1000).as("capacidad"),
+        lit("Cat").as("categoria"), lit("A").as("estado"),
+        lit(null).cast("string").as("idres"),
+        lit(null).cast("string").as("email"),
+        lit(null).cast("int").as("canres")))
+      store.init("reservas", graft.sources.Tables.reservas(spark).limit(0))
+      // state carries over in the state store for the stateful variant
+      val flows = new Flows(spark, store, trigger = Trigger.ProcessingTime(0))
+      val secs = drive(requests, nRounds) { ds =>
+        if (stateful) flows.admissionFlowStateful(ds.toDF())
+        else flows.admissionFlow(ds.toDF())
       }
-      q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
       val admitted = store.load("reservas").count()
       println(s"""{"metric":"$metric","requests":$n,"admitted":$admitted,""" +
         s""""batches":$nRounds,"sec":$secs,"req_per_sec":${(n / secs).toLong},"sf":"$sfDir"}""")
-    }
-
-    // ------------------------------------------------------------------
-    // consumerFlow end-to-end (the reference's whole async consumer
-    // topology, inventario/main.go:56-133): two-topic subscribe +
-    // routing + JSON unquote/parse + idempotent registration + cascade
-    // cancels + once-only seat returns, under 5% redelivery. Wire
-    // messages are string-quoted JSON post-images — exactly what the
-    // connector puts on the topics.
-    def jq(doc: String): String =
-      "\"" + doc.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    def runConsumer(metric: String, nRounds: Int,
-        rocksdb: Boolean = false): Unit = {
-      stateProvider(rocksdb)
-      val store = freshStore()
-      val flows = new Flows(spark, store, trigger = Trigger.ProcessingTime(0))
-      val inserts = requests.map { r =>
-        M("boletia.inventario", jq(
-          s"""{"_id": {"$$oid": "${r.id.reverse}"}, "nombre": "${r.evento}", """ +
-            s""""capacidad": 100, "categoria": "Cat", "estado": "A", """ +
-            s""""idres": {"$$oid": "${r.id}"}, "email": "${r.email}", """ +
-            s""""canres": ${r.cantidad}}"""))
-      }
-      // every 10th registered reservation comes back as a customer
-      // cancel (estado X → seat return); one organizer cancel per
-      // round exercises the cascade branch every micro-batch
-      val returns = requests.zipWithIndex.collect { case (r, i) if i % 10 == 0 =>
-        M("boletia.reservas", jq(
-          s"""{"_id": {"$$oid": "${r.id}"}, "evento": "${r.evento}", """ +
-            s""""estado": "X", "email": "${r.email}", "cantidad": ${r.cantidad}}"""))
-      }
-      val cancels = requests.take(nRounds).map { r =>
-        M("boletia.inventario", jq(
-          s"""{"_id": {"$$oid": "${r.id.reverse}"}, "nombre": "${r.evento}", """ +
-            s""""capacidad": 100, "categoria": "Cat", "estado": "C", """ +
-            s""""idres": null, "email": null, "canres": null}"""))
-      }
-      // 5% redelivery: duplicate every 20th message (both topics) —
-      // the registration appendUnique and the devoluciones anti-join
-      // must absorb them without double effects
-      val base = inserts ++ cancels ++ returns
-      val msgs = base ++ base.zipWithIndex.collect {
-        case (m, i) if i % 20 == 0 => m
-      }
-      val nm = msgs.length
-      val ms = MemoryStream[M](spark, cpus.toInt)
-      val chunk = (nm + nRounds - 1) / nRounds
-      val t0 = System.nanoTime()
-      val q = flows.consumerFlow(ms.toDS().toDF())
-      msgs.grouped(chunk).foreach { c =>
-        ms.addData(c.toSeq)
-        q.processAllAvailable()
-      }
-      q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val registered = store.load("reservas").count()
-      val returned = store.load("devoluciones").count()
-      println(s"""{"metric":"$metric","messages":$nm,"registered":$registered,""" +
-        s""""returned":$returned,"batches":$nRounds,"sec":$secs,""" +
-        s""""msg_per_sec":${(nm / secs).toLong},"sf":"$sfDir"}""")
     }
 
     // ------------------------------------------------------------------
@@ -179,26 +120,17 @@ object StreamBench {
     // ingest-side rate a trainer's window supply sustains.
     def runPacking(metric: String, nRounds: Int): Unit = {
       stateProvider(rocksdb = true)
-      val root = Files.createTempDirectory("graft-streambench-pack").toString
-      val store = new TableStore(spark, root)
+      val store = new TableStore(spark, freshRoot("pack"))
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(col("text").isNotNull)
         .select(col("doc_id").cast("long"), col("lang").cast("string"),
           col("text"))
         .as[(Long, String, String)].collect()
       val nd = docs.length
-      val ms = MemoryStream[(Long, String, String)](spark, cpus.toInt)
-      val chunk = (nd + nRounds - 1) / nRounds
-      val t0 = System.nanoTime()
-      val q = graft.streaming.PackingFlow.flow(store,
-        ms.toDS().toDF("doc_id", "lang", "text"),
-        trigger = Trigger.ProcessingTime(0))
-      docs.grouped(chunk).foreach { c =>
-        ms.addData(c.toSeq)
-        q.processAllAvailable()
+      val secs = drive(docs, nRounds) { ds =>
+        graft.streaming.PackingFlow.flow(store, ds.toDF("doc_id", "lang", "text"),
+          trigger = Trigger.ProcessingTime(0))
       }
-      q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
       val spans = store.load("packing_manifest").count()
       println(s"""{"metric":"$metric","docs":$nd,"spans":$spans,""" +
         s""""batches":$nRounds,"sec":$secs,""" +
@@ -218,7 +150,7 @@ object StreamBench {
     // full-corpus recompute per trigger).
     def runIngest(metric: String, nRounds: Int,
         chunkStore: Boolean = false, shardStore: Boolean = false): Unit = {
-      val root = Files.createTempDirectory("graft-streambench-ingest").toString
+      val root = freshRoot("ingest")
       val store = new TableStore(spark, root)
       val flows = new graft.streaming.IngestionFlows(spark, store, root,
         trigger = Trigger.ProcessingTime(0),
@@ -234,17 +166,9 @@ object StreamBench {
           col("source").cast("string"), col("lang").cast("string"))
         .as[(Long, String, String, String)].collect()
       val nd = docs.length
-      val ms = MemoryStream[(Long, String, String, String)](spark, cpus.toInt)
-      val chunk = (nd + nRounds - 1) / nRounds
-      val t0 = System.nanoTime()
-      val q = flows.documentIngestFlow(
-        ms.toDS().toDF("doc_id", "text", "source", "lang"))
-      docs.grouped(chunk).foreach { c =>
-        ms.addData(c.toSeq)
-        q.processAllAvailable()
+      val secs = drive(docs, nRounds) { ds =>
+        flows.documentIngestFlow(ds.toDF("doc_id", "text", "source", "lang"))
       }
-      q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
       val log = store.load("ingest_log")
       val admitted = log.filter(col("admitted")).count()
       val capped = log.filter(col("reason") === "source_cap").count()
@@ -259,10 +183,6 @@ object StreamBench {
         s""""docs_per_sec":${(nd / secs).toLong},"sf":"$sfDir"}""")
     }
 
-    require(Set("both", "batch", "stateful", "consumer", "packing",
-      "ingest")(variant),
-      s"unknown SPARK_GRAFT_STREAM_VARIANT '$variant' " +
-        "(expected both | batch | stateful | consumer | packing | ingest)")
     val runBatch = variant == "both" || variant == "batch"
     val runStateful = variant == "both" || variant == "stateful"
     if (runBatch) run("admission_throughput", stateful = false, 1)
@@ -276,14 +196,6 @@ object StreamBench {
       // lives off-heap — the provider a real cluster deployment runs
       run("admission_throughput_stateful_multibatch_rocksdb",
         stateful = true, rounds, rocksdb = true)
-    }
-    if (variant == "both" || variant == "consumer") {
-      runConsumer("consumer_throughput", 1)
-      runConsumer("consumer_throughput_multibatch", rounds)
-      // the saga on the deployment-grade state provider, mirroring the
-      // admission flow's RocksDB+changelog regime
-      runConsumer("consumer_throughput_multibatch_rocksdb", rounds,
-        rocksdb = true)
     }
     if (variant == "both" || variant == "packing") {
       runPacking("packing_throughput", 1)

@@ -153,7 +153,10 @@ final class RestService(spark: SparkSession, store: TableStore,
           graft.operators.PostingsIndex.forDir(spark, dir)
           graft.operators.VectorIndex.forDir(spark, dir)
           ()
-        } catch { case _: Throwable => () } // cold build retries on demand
+        } catch { case e: Throwable => // a cold build retries on demand
+          System.err.println(s"[rest] search prewarm over $dir failed " +
+            s"(the first /search builds instead): $e")
+        }
       }, "graft-search-prewarm")
       t.setDaemon(true)
       t.start()

@@ -99,4 +99,29 @@ class DecimalSumSpec extends AnyFunSuite {
     val r = both.head
     assert(r.getDecimal(0) === r.getDecimal(1))
   }
+
+  // make128's two overflow branches, called directly: the aggregate
+  // tests above never produce a sum that exceeds its result precision
+  private def hiLo(v: BigInt): (Long, Long) = ((v >> 64).toLong, v.toLong)
+
+  test("make128 fits-64-bit branch: in range, then null or throw past p digits") {
+    import graft.functions.expressions.DecimalSumUtil.make128
+    assert(make128(0L, 999L, 3, 0, nullOnOverflow = true).toBigDecimal === BigDecimal(999))
+    for (v <- Seq(1000L, -1000L)) {
+      assert(make128(v >> 63, v, 3, 0, nullOnOverflow = true) === null)
+      intercept[ArithmeticException](make128(v >> 63, v, 3, 0, nullOnOverflow = false))
+    }
+  }
+
+  test("make128 128-bit branch: in range, then null or throw past p digits") {
+    import graft.functions.expressions.DecimalSumUtil.make128
+    for (v <- Seq(BigInt(10).pow(20), -BigInt(10).pow(20))) {
+      val (hi, lo) = hiLo(v)
+      assert(hi != (lo >> 63), "value must need more than 64 bits")
+      assert(make128(hi, lo, 21, 2, nullOnOverflow = true).toBigDecimal ===
+        BigDecimal(v, 2))
+      assert(make128(hi, lo, 20, 2, nullOnOverflow = true) === null)
+      intercept[ArithmeticException](make128(hi, lo, 20, 2, nullOnOverflow = false))
+    }
+  }
 }

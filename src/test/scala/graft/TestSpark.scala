@@ -5,18 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (sbt forks a single test
   * JVM; suites grab the same session lazily). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.create(cores = 8, logLevel = "ERROR")
   val sf: String = "/root/testdata/sf0.001"
 
   /** The specs' reference cosine: double-widened sequential fold,
